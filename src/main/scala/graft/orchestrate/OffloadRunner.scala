@@ -313,20 +313,21 @@ object OffloadRunner {
     // the delta across the stage is the transport's own row count
     val preStageWritten = if (cfg.dryRun) 0L else settledRecordsWritten()
 
-    // the staged row count stageAndLoad already computed is REUSED by
-    // verify_counts and task_metrics below (r18, guide §1.2): the serial
-    // offload previously re-counted the staging directory twice more
-    var stagedCount: Option[Long] = None
+    // the staged row count and HWM that the final write observed are
+    // REUSED by verify_counts, save_metadata and task_metrics below, so no
+    // step rescans the staging directory
+    var staged: Option[StagedLoad.Staged] = None
     r.step("stage_and_load",
         s"staging=${cfg.stagingPath} final=${cfg.finalPath} " +
         s"mode=$finalMode partitionBy=${cfg.partitionCols.mkString(",")}") {
       planned.foreach { df =>
         StagedLoad.stageAndLoad(df, cfg.stagingPath, cfg.finalPath, schema,
-            cfg.partitionCols, finalMode, cfg.sortCols) match {
+            cfg.partitionCols, finalMode, cfg.sortCols,
+            cfg.incrementalKey) match {
           case Left(violations) =>
             throw new IllegalStateException(
               s"staged-data validation failed: ${violations.count()} rows")
-          case Right(n) => stagedCount = Some(n)
+          case Right(out) => staged = Some(out)
         }
       }
     }
@@ -351,11 +352,10 @@ object OffloadRunner {
     r.step("verify_counts", "count source slice vs staged slice") {
       planned.foreach { df =>
         // the source slice is counted fresh (that is the row-loss gate);
-        // the staged side reuses stageAndLoad's count of the exact same
-        // directory rather than scanning it again
+        // the staged side is the count the final write observed while
+        // reading the staging directory
         val s = df.count()
-        val t = stagedCount.getOrElse(
-          spark.read.parquet(cfg.stagingPath).count())
+        val t = staged.get.rows
         if (s != t)
           throw new IllegalStateException(s"row count mismatch: $s vs $t")
       }
@@ -363,19 +363,16 @@ object OffloadRunner {
 
 
     r.step("save_metadata", s"metadataDir=${cfg.metadataDir}") {
-      planned.foreach { df =>
+      planned.foreach { _ =>
         // An empty increment must NOT regress the HWM: keep the previous one.
         val previousHwm = MetadataStore.load(cfg.metadataDir, cfg.sourceTable)
           .map(_.incrementalHighValue).getOrElse(Nil)
-        // the HWM probes the STAGED slice: verify_counts has already
-        // gated it row-equal to the source slice, and the plain parquet
-        // scan skips re-running the source's predicate/HWM filter chain
-        // a third time (r18, §1.2)
+        // the HWM is the max the final write observed over the STAGED
+        // slice, which verify_counts has gated row-equal to the source
+        // slice
         val newHwm: Seq[String] =
           if (cfg.incrementalKey.nonEmpty)
-            CrossValidator.maxProbe(spark.read.parquet(cfg.stagingPath),
-                cfg.incrementalKey)
-              .map(_.map(String.valueOf)).getOrElse(previousHwm)
+            staged.get.hwm.map(_.map(String.valueOf)).getOrElse(previousHwm)
           else Nil
         MetadataStore.save(cfg.metadataDir, OffloadMetadata(
           sourceTable = cfg.sourceTable,
@@ -406,7 +403,7 @@ object OffloadRunner {
     // slice, which throws).
     if (!cfg.dryRun) {
       val transportRows = postStageWritten - preStageWritten
-      val stagedRows = planned.flatMap(_ => stagedCount).getOrElse(0L)
+      val stagedRows = staged.fold(0L)(_.rows)
       // settle again for the RAW total: a later Spark-writing step (an
       // executing BigQuery sink) may still have task events in flight
       val totalWritten = settledRecordsWritten()

@@ -1,10 +1,11 @@
 package graft.sink
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
 import graft.types.{CanonicalColumn, TypeMapper}
+import graft.verify.CrossValidator
 
 /** Staged load: staging write → staged-data validation → typed final insert.
   *
@@ -104,10 +105,31 @@ object StagedLoad {
     df.select(out: _*)
   }
 
-  /** Stage then load: write staging parquet, re-read, validate, write final
-    * (partitioned by synthetic keys when given). Returns (stagedRows,
-    * violations). Kept explicitly two-phase like the reference so the staged
-    * slice is an auditable, atomic retry unit. */
+  /** What the final write observed of the staged slice: its row count and,
+    * when HWM keys were given, the lexicographic max key tuple (None for an
+    * empty slice or no keys). */
+  final case class Staged(rows: Long, hwm: Option[Seq[Any]])
+
+  /** Scan of the staging files `written` produced, with its schema given
+    * rather than inferred (inference costs a Spark job). The file source
+    * makes a given schema nullable throughout, which is exactly what
+    * parquet inference returns. */
+  def readStaging(written: DataFrame, stagingPath: String): DataFrame =
+    written.sparkSession.read.schema(written.schema).parquet(stagingPath)
+
+  /** Bound on waiting for the final write's observed metrics, which are
+    * delivered once the write has succeeded. */
+  private val ObservationTimeout = scala.concurrent.duration.Duration(60, "s")
+
+  /** Stage then load: write staging parquet, re-read it
+    * ([[readStaging]]), validate, write final (partitioned by
+    * synthetic keys when given). Returns `Left(violations)` when staged-data
+    * validation fails, else `Right(Staged)`: the staged row count and
+    * `max(struct(hwmKeys))` — the same lexicographic max as
+    * `CrossValidator.maxProbe` — observed on the staged scan that feeds the
+    * final write, so neither costs a pass of its own. Kept explicitly
+    * two-phase like the reference so the staged slice is an auditable,
+    * atomic retry unit. */
   def stageAndLoad(
       df: DataFrame,
       stagingPath: String,
@@ -115,15 +137,19 @@ object StagedLoad {
       schema: Seq[CanonicalColumn],
       partitionCols: Seq[String] = Nil,
       finalMode: String = "overwrite",
-      sortCols: Seq[String] = Nil): Either[DataFrame, Long] = {
+      sortCols: Seq[String] = Nil,
+      hwmKeys: Seq[String] = Nil): Either[DataFrame, Staged] = {
     df.write.mode("overwrite").parquet(stagingPath)
-    val spark = df.sparkSession
-    val staged = spark.read.parquet(stagingPath)
+    val staged = readStaging(df, stagingPath)
     val bad = castViolations(staged, schema)
       .unionByName(notNullViolations(staged, schema), allowMissingColumns = true)
     if (!bad.isEmpty) Left(bad)
     else {
-      val projected = staged.select(castProjection(schema): _*)
+      val observation = Observation()
+      val metrics = count(lit(1)).as("rows") +:
+        (if (hwmKeys.isEmpty) Nil else Seq(CrossValidator.maxKey(hwmKeys)))
+      val projected = staged.observe(observation, metrics.head, metrics.tail: _*)
+        .select(castProjection(schema): _*)
       // Sort/cluster columns (reference operation/sort_columns.py; BigQuery
       // clustering): sortWithinPartitions gives per-file clustering ->
       // better min/max pruning on the sorted columns, no extra shuffle.
@@ -134,7 +160,10 @@ object StagedLoad {
       val writer = clustered.write.mode(finalMode)
       (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
        else writer).parquet(finalPath)
-      Right(staged.count())
+      val seen = scala.concurrent.Await.result(observation.future,
+        ObservationTimeout)
+      Right(Staged(seen.getLong(0),
+        if (hwmKeys.isEmpty) None else CrossValidator.maxKeyTuple(seen, 1)))
     }
   }
 }

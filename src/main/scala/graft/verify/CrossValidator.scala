@@ -1,6 +1,6 @@
 package graft.verify
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Cross-system validation queries — the only true relational compute the
@@ -94,12 +94,14 @@ object CrossValidator {
     * HWM that exceeds every real row, so the next increment's
     * strictly-greater boundary filter would silently skip rows that were
     * never offloaded. */
-  def maxProbe(target: DataFrame, keyCols: Seq[String]): Option[Seq[Any]] = {
-    val row = target.agg(max(struct(keyCols.map(col): _*)).as("hwm")).head()
-    if (row.isNullAt(0)) None
-    else {
-      val s = row.getStruct(0)
-      Some(keyCols.indices.map(s.get))
-    }
-  }
+  def maxProbe(target: DataFrame, keyCols: Seq[String]): Option[Seq[Any]] =
+    maxKeyTuple(target.agg(maxKey(keyCols)).head(), 0)
+
+  /** The lexicographic max key tuple as an aggregate; null over no rows. */
+  def maxKey(keyCols: Seq[String]): Column =
+    max(struct(keyCols.map(col): _*)).as("hwm")
+
+  /** The key values of a [[maxKey]] result at `row(i)`, None when null. */
+  def maxKeyTuple(row: Row, i: Int): Option[Seq[Any]] =
+    if (row.isNullAt(i)) None else Some(row.getStruct(i).toSeq)
 }

@@ -308,6 +308,10 @@ object Expectations {
       .orderBy(col("rule_id"))
   }
 
+  /** Bound on waiting for the rule threads to stop once the suite is
+    * over; their jobs are cancelled first, so this is rarely approached. */
+  private val PoolDrainSeconds = 60L
+
   /** The shared counting pass: one row of raw counts per rule —
     * `(rule_id, rule_type, table_name, column_name, n_rows,
     * n_violations)` — with the one-scan-per-table sharing described on
@@ -387,11 +391,18 @@ object Expectations {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      // every job a rule action starts carries this tag, so the rules
+      // still running when one fails can be cancelled as a set
+      val tag = s"graft-expectations-${java.util.UUID.randomUUID()}"
+      def task[T](body: => T): Future[T] = Future {
+        spark.sparkContext.addJobTag(tag)
+        body
+      }
       try {
         // one aggregate pass per table covering all its single-table
         // rules
         val perTableF = aggRules.groupBy(_.table).toSeq.map {
-          case (table, tableRules) => Future {
+          case (table, tableRules) => task {
             val df = rel(table)
             val aggs = count(lit(1)).as("_n_rows") +:
               tableRules.zipWithIndex.map { case (r, i) =>
@@ -418,7 +429,7 @@ object Expectations {
           perTable.map(t => t._1 -> t._2): _*)
         (refRules.map(_.table) ++ distRules.map(_.table)).distinct
           .foreach(t => tableRows.getOrElseUpdate(t, rel(t).count()))
-        val refReportsF = refRules.map { r => Future {
+        val refReportsF = refRules.map { r => task {
           val child = rel(r.table)
           // distinct child keys first: the anti-join runs at key scale
           val orphans = child.select(col(r.column)).na.drop().distinct()
@@ -430,7 +441,7 @@ object Expectations {
           (r.id, r.ruleType, r.table, r.columnDesc, tableRows(r.table),
             orphans.count())
         }}
-        val distReportsF = distRules.map { r => Future {
+        val distReportsF = distRules.map { r => task {
           val child = rel(r.table)
           (r.id, r.ruleType, r.table, r.columnDesc, tableRows(r.table),
             movedRows(child, r))
@@ -438,7 +449,17 @@ object Expectations {
         aggReports ++
           refReportsF.map(Await.result(_, Duration.Inf)) ++
           distReportsF.map(Await.result(_, Duration.Inf))
-      } finally pool.shutdown()
+      } finally {
+        // a failed rule leaves its siblings running: cancel their jobs,
+        // drop the queued ones and wait (bounded) for the threads, so no
+        // action still reads a shared checkpoint when the finally below
+        // releases it
+        spark.sparkContext.cancelJobsWithTag(tag,
+          "expectations suite finished or failed")
+        pool.shutdownNow()
+        pool.awaitTermination(PoolDrainSeconds,
+          java.util.concurrent.TimeUnit.SECONDS)
+      }
     } finally {
       // every consumer ran its action above; the shared checkpoints
       // have had their last read (the returned report is a local

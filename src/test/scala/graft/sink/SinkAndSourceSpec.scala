@@ -56,6 +56,72 @@ class StagedLoadSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") || loaded.count() > 0)
   }
 
+  private def stageOnly(df: org.apache.spark.sql.DataFrame,
+      partitionCols: Seq[String] = Nil, sortCols: Seq[String] = Nil,
+      hwmKeys: Seq[String] = Nil): (String, StagedLoad.Staged) = {
+    val base = Files.createTempDirectory("graft_stage_obs").toString
+    val out = StagedLoad.stageAndLoad(df, s"$base/staging", s"$base/final",
+      graft.types.TypeMapper.fromStructType(df.schema), partitionCols,
+      sortCols = sortCols, hwmKeys = hwmKeys)
+    (s"$base/staging", out.toOption.get)
+  }
+
+  test("staging is re-read with exactly the schema parquet inference " +
+      "returns, so dropping the inference job changes nothing") {
+    val tpch = Seq("lineitem", "orders", "part")
+      .map(t => graft.Tables.load(spark, sf("sf0.001"), t))
+    // non-nullable primitives and array elements, TIMESTAMP_NTZ, decimal
+    // and a partition column of the final write
+    val mixed = Seq(
+        (1L, java.time.LocalDateTime.of(2024, 1, 1, 0, 0),
+          BigDecimal("12.345"), Seq(1, 2), "2024-01"),
+        (2L, java.time.LocalDateTime.of(2024, 2, 1, 12, 30),
+          BigDecimal("-0.5"), Seq(3), "2024-02"))
+      .toDF("id", "ts_ntz", "amount", "tags", "part_m")
+      .withColumn("amount", col("amount").cast("decimal(12,3)"))
+    assert(mixed.schema("ts_ntz").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    assert(!mixed.schema("id").nullable)
+    (tpch.map(_ -> Nil) :+ (mixed -> Seq("part_m"))).foreach {
+      case (df, parts) =>
+        val (staging, _) = stageOnly(df, partitionCols = parts)
+        assert(StagedLoad.readStaging(df, staging).schema ==
+          spark.read.parquet(staging).schema)
+    }
+  }
+
+  test("the staged count the final write observes equals a count of " +
+      "the staging directory, partitioned and sorted") {
+    val orders = graft.Tables.load(spark, sf("sf0.001"), "orders")
+      .withColumn("part_m", date_format(col("o_orderdate"), "yyyy-MM"))
+    val lineitem = graft.Tables.load(spark, sf("sf0.001"), "lineitem")
+      .repartition(4)
+    Seq(stageOnly(orders, partitionCols = Seq("part_m")),
+        stageOnly(lineitem, sortCols = Seq("l_orderkey"))).foreach {
+      case (staging, staged) =>
+        assert(staged.rows > 0L)
+        assert(staged.rows == spark.read.parquet(staging).count())
+        assert(staged.hwm.isEmpty)
+    }
+  }
+
+  test("the observed HWM equals CrossValidator.maxProbe over staging, " +
+      "single and composite keys; an empty slice observes no max") {
+    // l_shipdate is TIMESTAMP_NTZ: the composite key is (timestamp, long)
+    val lineitem = graft.Tables.load(spark, sf("sf0.001"), "lineitem")
+    Seq(Seq("l_orderkey"), Seq("l_shipdate", "l_orderkey")).foreach { keys =>
+      val (staging, staged) = stageOnly(lineitem, hwmKeys = keys)
+      val probed = CrossValidator.maxProbe(spark.read.parquet(staging), keys)
+      assert(probed.nonEmpty)
+      assert(staged.hwm == probed, keys)
+      assert(staged.hwm.get.map(String.valueOf) ==
+        probed.get.map(String.valueOf))
+    }
+    val (_, empty) = stageOnly(lineitem.filter(lit(false)),
+      hwmKeys = Seq("l_shipdate", "l_orderkey"))
+    assert(empty == StagedLoad.Staged(0L, None))
+  }
+
   test("transforms: suppress drops, null nulls, translate/regexp rewrite") {
     import StagedLoad.Transform
     val df = Seq(("a#b", "hello", 1.0, 5)).toDF("t", "r", "p", "s")

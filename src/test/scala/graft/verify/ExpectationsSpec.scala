@@ -136,6 +136,44 @@ class ExpectationsSpec extends SparkSpec {
     assert(counts("p") === 1, "parent table loaded more than once")
   }
 
+  test("a failed rule surfaces its own error, with its sibling rules' " +
+      "jobs cancelled before the shared checkpoint is released") {
+    import org.apache.spark.graftbridge.ListenerBridge
+    val child = spark.range(0, 1000).toDF("fk")
+    val failing = spark.range(1)
+      .select(raise_error(lit("boom: parent unreadable")).cast("long")
+        .as("pk"))
+    // sleeps 20 s unless its task is killed
+    val nap = udf { (x: Long) =>
+      val until = System.nanoTime() + 20000000000L
+      while (System.nanoTime() < until &&
+          !org.apache.spark.TaskContext.get().isInterrupted())
+        Thread.sleep(20)
+      x
+    }
+    val slow = spark.range(0, 4, 1, 4).select(nap(col("id")).as("pk"))
+    val e = intercept[Exception] {
+      evaluate(spark, Map("c" -> child, "bad" -> failing, "slow" -> slow),
+        Seq(NotNull("c", "fk"),
+          RefIntegrity("c", "fk", "bad", "pk"),
+          RefIntegrity("c", "fk", "slow", "pk")))
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      .mkString(" | ")
+    assert(chain.contains("boom: parent unreadable"), chain)
+    // the slow sibling's job was cancelled with the call, not left to
+    // run its 20 s out (its end event may trail the return briefly)
+    val deadline = System.nanoTime() + 3000000000L
+    def active() = {
+      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      spark.sparkContext.statusTracker.getActiveJobIds()
+    }
+    while (active().nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(active().isEmpty)
+  }
+
   test("in_range survives un-castable values and counts them as " +
       "violations (ANSI cast would abort the scan)") {
     val nasty = Seq("0.05", "N/A", "9999999999999.0", "0.2")
