@@ -27,6 +27,9 @@ object Tables {
     *  - UTC-adjusted `timestamp[us]`: already TimestampType, passthrough.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    // every declared query reads through here, so this is where a session
+    // gets the engine's optimizer rules (exact DECIMAL kernels, pruning)
+    graft.plans.GraftExtensions.install(spark)
     // Schema-inference cache (r18): a bare `read.parquet(path)` infers
     // the schema by opening the file footer on EVERY call — a
     // driver-side metadata read repeated thousands of times across a

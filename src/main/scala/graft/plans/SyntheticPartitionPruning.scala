@@ -3,7 +3,6 @@ package graft.plans
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -192,68 +191,4 @@ object SyntheticPartitionPruning extends Rule[LogicalPlan] with PredicateHelper 
         Some(Literal(UTF8String.fromString(s), StringType))
       case _ => None
     }
-}
-
-/** Session extensions registering the engine's Catalyst customisations:
-  * the synthetic-partition pruning rule plus the native kernels as SQL
-  * functions, so the whole operator surface is reachable from
-  * `spark.sql(...)` without touching the Scala API.
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
-
-  private def oneArg(name: String, args: Seq[Expression])
-      : Expression = {
-    require(args.length == 1, s"$name takes exactly 1 argument")
-    args.head
-  }
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => SyntheticPartitionPruning)
-    e.injectFunction((FunctionIdentifier("graft_simhash32"),
-      info("graft_simhash32", "graft_simhash32(text) - 32-bit simhash"),
-      args => graft.functions.SimHashSignature(
-        oneArg("graft_simhash32", args), wide = false)))
-    e.injectFunction((FunctionIdentifier("graft_simhash64"),
-      info("graft_simhash64", "graft_simhash64(text) - 64-bit simhash"),
-      args => graft.functions.SimHashSignature(
-        oneArg("graft_simhash64", args), wide = true)))
-    e.injectFunction((FunctionIdentifier("graft_word_shingles"),
-      info("graft_word_shingles",
-        "graft_word_shingles(text, n) - distinct word n-grams"),
-      args => {
-        require(args.length == 2, "graft_word_shingles takes (text, n)")
-        graft.functions.WordShingles(args.head,
-          args(1).eval().asInstanceOf[Number].intValue())
-      }))
-    e.injectFunction((FunctionIdentifier("graft_minhash_sigs"),
-      info("graft_minhash_sigs",
-        "graft_minhash_sigs(shingles, k) - k minhash signature slots"),
-      args => {
-        require(args.length == 2, "graft_minhash_sigs takes (shingles, k)")
-        graft.functions.MinHashSigs(args.head,
-          args(1).eval().asInstanceOf[Number].intValue())
-      }))
-    e.injectFunction((FunctionIdentifier("graft_winnow_fingerprints"),
-      info("graft_winnow_fingerprints",
-        "graft_winnow_fingerprints(text, k, w) - winnowing fingerprint set"),
-      args => {
-        require(args.length == 3,
-          "graft_winnow_fingerprints takes (text, k, w)")
-        graft.functions.WinnowFingerprints(args.head,
-          args(1).eval().asInstanceOf[Number].intValue(),
-          args(2).eval().asInstanceOf[Number].intValue())
-      }))
-    e.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - double-precision dot product"),
-      args => {
-        require(args.length == 2, "graft_dot takes (a, b)")
-        graft.functions.DotProduct(args.head, args(1))
-      }))
-  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plan.SyntheticPartition
-import graft.plans.SyntheticPartitionPruning
+import graft.plans.GraftExtensions
 import graft.sink.SchemaSync
 
 /** Coverage queries for the remaining SURVEY §2 operators: synthetic-
@@ -37,9 +37,8 @@ object ExtraQueries {
             SyntheticPartition.dateStringKey(col("o_orderdate"), "M"))
           .write.mode("overwrite").partitionBy("goe_part_m_o_orderdate")
           .parquet(s"$base/orders")
-      if (!s.experimental.extraOptimizations.contains(SyntheticPartitionPruning))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ SyntheticPartitionPruning
+      // the base may already exist, so no Tables.load has run
+      GraftExtensions.install(s)
       s.read.parquet(s"$base/orders")
         .filter(col("o_orderdate") >= lit("1998-01-01").cast("timestamp"))
         .groupBy(col("goe_part_m_o_orderdate"))

@@ -15,7 +15,13 @@ import graft.verify.CrossValidator
   * Cross-engine determinism rules used throughout (these ARE the
   * engineering content of the oracle pairing):
   *  - double columns are aggregated through `DECIMAL` casts (exact
-  *    arithmetic both sides) and only cast back to double at the end;
+  *    arithmetic both sides) and only cast back to double at the end.
+  *    The contract is served by exact long kernels
+  *    (`graft.plans.ExactDecimalKernels`, installed by `Tables.load`):
+  *    double→decimal casts, products of decimals of ≤ 18 digits and
+  *    sums of them run on longs wherever the result provably equals
+  *    Spark's BigDecimal path, and on that path everywhere else, so
+  *    every result is Spark's bit for bit;
   *  - raw doubles are only emitted un-aggregated (min/max/value — bitwise
   *    identical on both engines);
   *  - timestamps cross the boundary as formatted strings when the engines'

@@ -4,6 +4,8 @@ import graft.Cut.CutOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.concurrent.duration._
+
 /** Declarative data-quality expectations over parquet tables — the
   * generalisation of the reference's staged-data validation rules
   * (NOT NULL scans, precision-overflow range checks, cast probes —
@@ -276,11 +278,15 @@ object Expectations {
     * (a 100 TB fact checkpoints only its audited columns); every action
     * completes inside this call, so the checkpoints are released before
     * returning. Single-consumer tables skip the checkpoint entirely —
-    * the parquet scan with column pruning is already optimal. */
+    * the parquet scan with column pruning is already optimal.
+    * `ruleTimeout` bounds the rule actions: past it the call throws a
+    * [[RuleTimeout]] naming the rule still running, after cancelling its
+    * jobs. */
   def evaluate(spark: SparkSession, load: String => DataFrame,
-      rules: Seq[Rule]): DataFrame = {
+      rules: Seq[Rule],
+      ruleTimeout: FiniteDuration = DefaultRuleTimeout): DataFrame = {
     import spark.implicits._
-    counts(spark, load, rules)
+    counts(spark, load, rules, ruleTimeout)
       .toDF("rule_id", "rule_type", "table_name", "column_name",
         "n_rows", "n_violations")
       .withColumn("passed", col("n_violations") === 0L)
@@ -295,7 +301,7 @@ object Expectations {
       graded: Seq[Graded]): DataFrame = {
     import spark.implicits._
     val byId = graded.map(g => g.rule.id -> g).toMap
-    counts(spark, load, graded.map(_.rule))
+    counts(spark, load, graded.map(_.rule), DefaultRuleTimeout)
       .map { case (id, tpe, tbl, colD, n, v) =>
         val g = byId(id)
         (id, tpe, tbl, colD, n, v, g.warnAbove, g.errorAbove,
@@ -312,12 +318,22 @@ object Expectations {
     * over; their jobs are cancelled first, so this is rarely approached. */
   private val PoolDrainSeconds = 60L
 
+  /** Default bound on the whole suite's rule actions, measured from their
+    * submission: room for a full scan of the largest audited table, while
+    * a job that never finishes (a lost executor, a stuck source) surfaces
+    * as a [[RuleTimeout]] naming the rule instead of blocking forever. */
+  val DefaultRuleTimeout: FiniteDuration = 4.hours
+
+  /** A rule action that had not finished when the suite's bound ran out. */
+  final class RuleTimeout(val rule: String, val bound: FiniteDuration)
+      extends RuntimeException(s"expectation rule $rule did not finish within $bound")
+
   /** The shared counting pass: one row of raw counts per rule —
     * `(rule_id, rule_type, table_name, column_name, n_rows,
     * n_violations)` — with the one-scan-per-table sharing described on
     * [[evaluate]]. */
   private def counts(spark: SparkSession, load: String => DataFrame,
-      rules: Seq[Rule])
+      rules: Seq[Rule], ruleTimeout: FiniteDuration)
       : Seq[(String, String, String, String, Long, Long)] = {
     require(rules.nonEmpty)
     require(rules.map(_.id).distinct.size == rules.size,
@@ -387,7 +403,6 @@ object Expectations {
       // collected per future and reassembled in rule order, so the
       // report is unchanged.
       import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -398,11 +413,18 @@ object Expectations {
         spark.sparkContext.addJobTag(tag)
         body
       }
+      val deadline = ruleTimeout.fromNow
+      def await[T](f: Future[T], rule: String): T =
+        try Await.result(f, deadline.timeLeft max Duration.Zero)
+        catch {
+          case _: java.util.concurrent.TimeoutException =>
+            throw new RuleTimeout(rule, ruleTimeout)
+        }
       try {
         // one aggregate pass per table covering all its single-table
         // rules
         val perTableF = aggRules.groupBy(_.table).toSeq.map {
-          case (table, tableRules) => task {
+          case (table, tableRules) => tableRules.map(_.id).mkString(",") -> task {
             val df = rel(table)
             val aggs = count(lit(1)).as("_n_rows") +:
               tableRules.zipWithIndex.map { case (r, i) =>
@@ -412,8 +434,7 @@ object Expectations {
             (table, row.getAs[Long]("_n_rows"), tableRules, row)
           }
         }
-        val perTable =
-          perTableF.map(Await.result(_, Duration.Inf))
+        val perTable = perTableF.map { case (ids, f) => await(f, ids) }
         val aggReports = perTable.flatMap {
           case (_, n, tableRules, row) =>
             tableRules.zipWithIndex.map { case (r, i) =>
@@ -447,8 +468,8 @@ object Expectations {
             movedRows(child, r))
         }}
         aggReports ++
-          refReportsF.map(Await.result(_, Duration.Inf)) ++
-          distReportsF.map(Await.result(_, Duration.Inf))
+          refReportsF.zip(refRules).map { case (f, r) => await(f, r.id) } ++
+          distReportsF.zip(distRules).map { case (f, r) => await(f, r.id) }
       } finally {
         // a failed rule leaves its siblings running: cancel their jobs,
         // drop the queued ones and wait (bounded) for the threads, so no

@@ -122,4 +122,32 @@ class VectorExpressionsSpec extends SparkSpec {
       s"expected codegen'd int-dot projection in plan:\n$plan")
     assert(scored.filter(col("d") >= 0).count() == 500)
   }
+
+  test("PQ subspace distortion: codegen and interpreted agree, and an " +
+      "empty first sub-book is null in both") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_pq_parity")
+      .resolve("in").toString
+    Seq((0L, Seq(1.0, 2.0), Seq(0, 0)), (1L, Seq(0.5, -4.25), Seq(0, 1)),
+        (2L, Seq(1.0), Seq(0, 0)))
+      .toDF("id", "vec", "codes").write.parquet(path)
+    val books = Seq(
+      Seq(Seq(Seq(1.0), Seq(2.5)), Seq(Seq(3.0), Seq(-4.0))),
+      Seq(Seq.empty[Seq[Double]], Seq(Seq(3.0))))
+    val results = CodegenModes.all.map { codegen =>
+      val s = spark.newSession()
+      CodegenModes.set(s, codegen)
+      books.map { cb =>
+        s.read.parquet(path).select(col("id"),
+          VectorFunctions.pqSubspaceDistE9(col("vec"), col("codes"), cb).as("e"))
+          .collect().map(r => r.getLong(0) ->
+            Option(r.getSeq[Long](1)).map(_.toList)).sortBy(_._1).toList
+      }
+    }
+    assert(results.distinct.size == 1, results)
+    val Seq(normal, emptyFirst) = results.head
+    assert(normal.map(_._2) == List(Some(List(0L, 1000000000L)),
+      Some(List(250000000L, 62500000L)), None))
+    assert(emptyFirst.forall(_._2.isEmpty))
+  }
 }

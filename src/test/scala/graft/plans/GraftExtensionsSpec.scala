@@ -65,4 +65,18 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .flatMap(_.rules).map(_.ruleName)
     assert(batches.contains(SyntheticPartitionPruning.ruleName))
   }
+
+  test("Tables.load adds no second copy of the injected rules") {
+    // the extensions place each rule in both operator-optimization
+    // batches; an install on top must leave those counts as they are
+    def counts = {
+      val rules = spark.sessionState.optimizer.batches.flatMap(_.rules)
+      GraftExtensions.optimizerRules.map(r => rules.count(_ eq r))
+    }
+    val before = counts
+    assert(before.forall(_ > 0))
+    (1 to 3).foreach(_ => graft.Tables.load(spark, "/root/testdata/sf0.001", "orders"))
+    assert(counts == before)
+    assert(spark.experimental.extraOptimizations.isEmpty)
+  }
 }

@@ -174,6 +174,37 @@ class ExpectationsSpec extends SparkSpec {
     assert(active().isEmpty)
   }
 
+  test("a rule past the suite's bound fails with an error naming it, " +
+      "and its job is cancelled") {
+    import org.apache.spark.graftbridge.ListenerBridge
+    // sleeps 20 s unless its task is killed
+    val nap = udf { (x: Long) =>
+      val until = System.nanoTime() + 20000000000L
+      while (System.nanoTime() < until &&
+          !org.apache.spark.TaskContext.get().isInterrupted())
+        Thread.sleep(20)
+      x
+    }
+    // a uniqueness count has to read every value, so the nap runs
+    val slow = spark.range(0, 4, 1, 4).select(nap(col("id")).as("v"))
+    val rule = Unique("slow", Seq("v"))
+    val t0 = System.nanoTime()
+    val e = intercept[Expectations.RuleTimeout] {
+      evaluate(spark, Map("slow" -> slow), Seq(rule),
+        ruleTimeout = scala.concurrent.duration.Duration(1, "s"))
+    }
+    assert(e.rule == rule.id && e.getMessage.contains(rule.id))
+    assert(System.nanoTime() - t0 < 15000000000L, "waited for the slow job")
+    val deadline = System.nanoTime() + 3000000000L
+    def active() = {
+      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      spark.sparkContext.statusTracker.getActiveJobIds()
+    }
+    while (active().nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(active().isEmpty)
+  }
+
   test("in_range survives un-castable values and counts them as " +
       "violations (ANSI cast would abort the scan)") {
     val nasty = Seq("0.05", "N/A", "9999999999999.0", "0.2")
